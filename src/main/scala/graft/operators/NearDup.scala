@@ -29,14 +29,15 @@ object NearDup {
   def sigCol(j: Int): String = s"sig_$j"
 
   /** Operator-internal persisted frames that outlive their call (the
-    * LSH band/shingle-set indexes, the final CC labels). Spark's
-    * CacheManager dedupes identical plans, so repeated calls over the
-    * same inputs reuse one copy — but *different* inputs would
-    * accumulate blocks for the session's lifetime. Every such frame is
-    * registered here; [[releaseCaches]] drops them all (safe at any
-    * time — an unpersisted frame silently recomputes), and the
-    * registry is capped so unattended long-running sessions evict the
-    * oldest index instead of growing without bound.
+    * LSH band/shingle-set indexes). Spark's CacheManager dedupes
+    * identical plans, so repeated calls over the same inputs reuse one
+    * copy — but *different* inputs would accumulate blocks for the
+    * session's lifetime. Every such frame is registered here;
+    * [[releaseCaches]] drops them all (safe at any time — an
+    * unpersisted frame silently recomputes), and the registry is capped
+    * so unattended long-running sessions evict the oldest index instead
+    * of growing without bound. Only `persist`ed frames belong here:
+    * `unpersist` does nothing to a checkpointed frame.
     */
   private val MaxCachedFrames = 8
   private val cachedFrames = scala.collection.mutable.Queue.empty[DataFrame]
@@ -52,10 +53,12 @@ object NearDup {
     // its LRU position instead.
     val dup = cachedFrames.dequeueAll(
       _.queryExecution.analyzed.sameResult(df.queryExecution.analyzed))
-    if (dup.nonEmpty) {
-      cachedFrames.enqueue(dup.head)
-      dup.drop(1).foreach(_.unpersist(blocking = false))
-    } else {
+    // equivalent plans share ONE cache entry, so never unpersist a
+    // duplicate (that would uncache the entry dup.head still uses);
+    // the dedupe above keeps at most one queued
+    assert(dup.size <= 1, s"${dup.size} equivalent cached plans queued")
+    if (dup.nonEmpty) cachedFrames.enqueue(dup.head)
+    else {
       cachedFrames.enqueue(df)
       while (cachedFrames.size > MaxCachedFrames)
         cachedFrames.dequeue().unpersist(blocking = false)
@@ -63,10 +66,11 @@ object NearDup {
     df
   }
 
-  /** Unpersist every operator-internal cached frame registered by
-    * [[minhashPairs]] / [[dupClusters]]. Call when done with a batch of
-    * near-dup work; subsequent use of previously returned DataFrames
-    * stays correct (they recompute).
+  /** Unpersist every operator-internal cached frame registered by the
+    * LSH operators ([[minhashPairs]], [[containmentPairs]], ...). Call
+    * when done with a batch of near-dup work; subsequent use of
+    * previously returned DataFrames stays correct (they recompute).
+    * [[dupClusters]] registers nothing: its labels are a local relation.
     */
   def releaseCaches(): Unit = synchronized {
     cachedFrames.dequeueAll(_ => true).foreach(_.unpersist(blocking = false))
@@ -520,77 +524,12 @@ object NearDup {
   }
 
   /** Connected components over a near-duplicate pair graph: every doc
-    * in a cluster gets the cluster's minimum doc id as its label —
-    * the standard final stage of corpus dedup (keep one doc per
-    * cluster, drop the rest).
-    *
-    * Iterative min-label propagation (the large-graph CC algorithm):
-    * each round every node adopts the minimum label among itself and
-    * its neighbors; converges in O(diameter) rounds. Near-dup graphs
-    * are overwhelmingly tiny cliques/chains, so this is 2-4 rounds in
-    * practice. Each round is one shuffle join + one aggregation; the
-    * driver only checks a convergence count. Labels are persisted per
-    * round and unpersisted after — no lineage blowup.
+    * in a cluster gets the cluster's minimum doc id as its label — the
+    * standard final stage of corpus dedup (keep one doc per cluster,
+    * drop the rest). Delegates to [[ConnectedComponents.labels]].
     */
-  def dupClusters(pairs: DataFrame, aCol: String, bCol: String, maxIter: Int = 20): DataFrame = {
-    // materialize the (typically expensive, unpersisted) pair plan
-    // ONCE before symmetrizing — the union's two branches each
-    // re-executed it (an LSH verify pass per branch) — and then
-    // TRUNCATE its lineage: every round below re-analyzes its full
-    // logical plan twice (once per edge direction), a driver cost
-    // that grew with the r16 hot-bucket fold (StageProfile: 0.3-1.1 s
-    // inter-job planning gaps, ~40% of the query, guide §3.3 "very
-    // large plans … materialising an intermediate truncates"). Order
-    // matters for the r15 stats pitfall: checkpointing the
-    // UNMATERIALIZED plan captures its join-product size estimates
-    // (~10^29 bytes — SoftDedupPlanProbe documents the broadcast
-    // regression); persist + count FIRST, so the checkpoint's origin
-    // stats are the InMemoryRelation's ACTUAL materialized bytes and
-    // downstream join planning keeps real sizes.
-    val base = pairs.select(col(aCol).as("s"), col(bCol).as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count()
-    val baseT = base.localCheckpoint(true) // plan-truncated, true stats
-    base.unpersist(blocking = false)       // checkpoint blocks carry the data
-    val edges = baseT
-      .unionByName(baseT.select(col("t").as("s"), col("s").as("t")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    var labels = edges.select(col("s").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "s").withColumnRenamed("comp", "srcComp"), "s")
-        .groupBy(col("t").as("id"))
-        .agg(min(col("srcComp")).as("nbrComp"))
-      val next = labels
-        .join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nbrComp"), col("comp"))).as("comp"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val changed = next.as("n").join(labels.as("l"), "id")
-        .where(col("n.comp") =!= col("l.comp")).count()
-      // truncate the round's lineage: labels' logical plan otherwise
-      // DOUBLES per round (next embeds the previous labels twice), so
-      // per-round analysis grows exponentially. The count above
-      // materialized the persist, so the checkpoint captures actual
-      // stats; the checkpoint read job is one cached pass over a
-      // skinny frame — pennies against the planning it removes.
-      val nextT = next.localCheckpoint(true)
-      next.unpersist(blocking = false)
-      labels.unpersist(blocking = false)
-      labels = nextT
-      converged = changed == 0
-      iter += 1
-    }
-    edges.unpersist()
-    registerCache(labels) // final labels frame stays persisted until released
-    labels.select(col("id"), col("comp").as("cluster_id"))
-  }
+  def dupClusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    ConnectedComponents.labels(pairs, aCol, bCol)
 
   /** Soft (probabilistic) near-dup down-sampling — the CCNet/C4-style
     * alternative to hard keep-one ([[Dedup]] / cluster-best): every

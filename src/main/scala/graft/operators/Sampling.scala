@@ -49,11 +49,13 @@ object Sampling {
     * never straddle train/test (the eval-contamination failure mode a
     * plain per-doc split invites: the model "generalizes" to a test
     * doc it memorized as a training near-copy). `clusters` is the
-    * (id, cluster_id) map from [[ConnectedComponents.labels]]; docs
-    * absent from it are their own representative, so the assignment
-    * degrades to the plain [[splitLabel]] exactly where no duplicate
-    * exists. One join against the skinny cluster map — O(clustered
-    * docs), broadcastable when dup rates are sane.
+    * (id, cluster_id) map from [[ConnectedComponents.labels]] (what
+    * [[NearDup.dupClusters]] returns too); docs absent from it are
+    * their own representative, so the assignment degrades to the plain
+    * [[splitLabel]] exactly where no duplicate exists. One join against
+    * the skinny cluster map — O(clustered docs); when the map is small
+    * enough to collect it comes back as a local relation with exact
+    * size stats, so the join broadcasts it.
     */
   def leakageSafeSplit(
       docs: DataFrame,

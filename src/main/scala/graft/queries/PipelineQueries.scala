@@ -144,11 +144,10 @@ object PipelineQueries {
     NearDup.dupClusters(pairs, "a_id", "b_id").orderBy("id")
   }
 
-  /** P18 scale path: the SAME near-dup pair graph labeled by the
-    * alternating large-star/small-star contraction
-    * ([[graft.operators.ConnectedComponents]]) — identical contract
-    * to [[qDupClusters]] (the oracle is the same recursive CTE), but
-    * O(log n) rounds independent of graph diameter.
+  /** P18: the SAME near-dup pair graph labeled by calling
+    * [[graft.operators.ConnectedComponents]] directly instead of
+    * through `NearDup.dupClusters` — identical result to
+    * [[qDupClusters]] (the oracle is the same recursive CTE).
     */
   def qCcLabels(s: SparkSession, dir: String): DataFrame = {
     val pairs = NearDup.minhashPairs(

@@ -56,8 +56,13 @@ object Tables {
     * still reads all parquet data per run). Non-CBO sessions (the
     * default) keep the original ParquetTable path untouched.
     */
-  private val statsReady =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Boolean]()
+  private val statsReady = java.util.Collections.synchronizedMap(
+    // insertion-ordered and bounded: past 4096 markers the OLDEST goes
+    // (its session, if still live, just re-ANALYZEs once)
+    new java.util.LinkedHashMap[(String, String), Boolean]() {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, String), Boolean]): Boolean = size() > 4096
+    })
 
   private def statsTable(
       spark: SparkSession, dir: String, name: String): Option[DataFrame] = {
@@ -68,8 +73,10 @@ object Tables {
     // 0.93 → 1.36 s same-window A/B) — stats there disturb plans the
     // operators already pin
     if (!TpchTables.contains(name)) return None
-    val db = "graft_stats_" +
-      java.lang.Integer.toHexString(dir.hashCode).replace('-', 'n')
+    // a digest of the FULL path: two dirs must never share a db, or
+    // CREATE TABLE IF NOT EXISTS would keep the first dir's LOCATION
+    val db = "graft_stats_" + java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val key = (graft.tables.SchemaCache.sessionId(spark), dir + "#" + name)
     if (!statsReady.containsKey(key)) synchronized {
       if (!statsReady.containsKey(key)) {
@@ -94,8 +101,6 @@ object Tables {
         else
           spark.sql(s"ANALYZE TABLE $db.$name COMPUTE STATISTICS")
         statsReady.put(key, true)
-        // bound: dead sessions' keys are garbage but tiny; clear at 4k
-        if (statsReady.size > 4096) statsReady.clear()
       }
     }
     Some(spark.table(s"$db.$name"))
